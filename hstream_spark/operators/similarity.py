@@ -321,6 +321,11 @@ def embedding_near_duplicates_capped(
     measured SLOWER and erratic at sf0.1: it reintroduces per-side
     join exchanges and its bogus-small post-broadcast size estimate
     can flip the self-join to a full-side broadcast.)
+
+    Construction is eager: the salted frame's ``localCheckpoint`` runs
+    Spark jobs (the vector fold, the occupancy window and the salt)
+    when this function is called, before any action on the returned
+    frame.
     """
     if dim is None:
         raise ValueError("dim is required for the LSH path")

@@ -5743,7 +5743,8 @@ def q_stratified_sample(spark, sf):
 )
 def q_embedding_kmeans(spark, sf):
     """Spherical k-means clustering of the embedding corpus (4 clusters,
-    3 Lloyd iterations). Per iteration the cluster exchanges only
+    4 fused Lloyd iterations; the 4th model is discarded, only its
+    objective is kept). Per iteration the cluster exchanges only
     model-sized state (k x dim sums) — the canonical driver-model /
     executor-data iterative shape.
 

@@ -1568,7 +1568,12 @@ class HStreamEngine:
         to a list of ``(record_dict, event_time_seconds)`` (kafka
         ingestion): payload streams evolve their value-typed schema per
         record; typed streams coerce via ``from_json`` (missing fields
-        → NULL, same as the reference's FlowObject ingestion)."""
+        → NULL, same as the reference's FlowObject ingestion).
+
+        The records reach Spark as one Arrow table of JSON text
+        (``__j``) and event seconds (``__ts_sec``), a columnar transfer
+        instead of one pickled Python row per record, so pyarrow is
+        required on the ingest path. Each call writes one part file."""
         if not records:
             return 0
         if info.dynamic:
@@ -1578,15 +1583,15 @@ class HStreamEngine:
                 pass
             if info.schema is None:
                 info.payload = True
-        rows = [
-            (json.dumps(rec, default=_payload_default), float(ts))
-            for rec, ts in records
-        ]
-        raw_schema = T.StructType([
-            T.StructField("__j", T.StringType()),
-            T.StructField("__ts_sec", T.DoubleType()),
-        ])
-        raw = self.spark.createDataFrame(rows, raw_schema)
+        import pyarrow as pa
+
+        raw = self.spark.createDataFrame(pa.table({
+            "__j": pa.array(
+                [json.dumps(rec, default=_payload_default) for rec, _ts in records],
+                pa.string(),
+            ),
+            "__ts_sec": pa.array([float(ts) for _rec, ts in records], pa.float64()),
+        }))
         ts_col = F.timestamp_seconds(F.col("__ts_sec")).alias(EVENT_TIME_COL)
         if info.payload:
             for rec, _ts in records:
@@ -1626,14 +1631,12 @@ class HStreamEngine:
                 ],
                 F.col(EVENT_TIME_COL),
             )
-        # one part file per append: INSERT/poll batches are driver-sized
-        # (a few rows to a few thousand), but createDataFrame spreads
-        # them over defaultParallelism partitions — without the coalesce
-        # every single-row INSERT writes one empty part plus one 1-row
-        # part, doubling the small-file accumulation compact() exists to
-        # fix
+        # one part file per append: createDataFrame makes one partition
+        # per Arrow batch of maxRecordsPerBatch rows, so without the
+        # coalesce a large poll writes several parts, adding to the
+        # small-file accumulation compact() exists to fix
         out.coalesce(1).write.mode("append").parquet(info.path)
-        return len(rows)
+        return len(records)
 
     def _start_continuous(self, select: A.Select, sink_stream: str, sql: str,
                           qname: Optional[str] = None) -> QueryInfo:

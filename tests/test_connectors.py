@@ -3,6 +3,7 @@ drains one; jdbc wiring validates options up to the jar boundary."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -1710,6 +1711,108 @@ class TestTimeTypeThroughConnectors:
                 assert rows[2] == datetime.time(10, 0)
             finally:
                 eng.shutdown()
+
+    @staticmethod
+    def _mixed_poll_values(n: int = 2000) -> list:
+        """``n`` records for one produce call, so one record batch of
+        well over 64 KiB: a missing field, a wrong-typed field, a
+        malformed TIME and a non-object JSON value, then clean rows."""
+        import json as _json
+
+        docs = [
+            {"worker": 0, "clock_in": "08:00:00"},
+            {"worker": "not-a-number", "name": "x", "clock_in": "08:01:00"},
+            {"worker": 2, "name": "y", "clock_in": "25:61:00"},
+            [1, 2, 3],
+        ] + [
+            {"worker": i, "name": f"w{i:05d}",
+             "clock_in": f"{i % 24:02d}:{i % 60:02d}:00"}
+            for i in range(4, n)
+        ]
+        return [
+            (None, _json.dumps(d).encode(), 1_000_000 + i)
+            for i, d in enumerate(docs)
+        ]
+
+    @pytest.mark.parametrize("payload", [False, True])
+    def test_large_mixed_poll_lands_as_one_part(
+        self, spark, tmp_path, monkeypatch, payload
+    ):
+        """One poll of 2000 records, fetched as one record batch past
+        the vectorized-CRC cut-over: the Arrow hand-off keeps every
+        record, the NULLs ``from_json`` gives a typed stream (the
+        payload stream keeps the raw values, demoting ``worker`` to
+        text), and one part file for the poll."""
+        import datetime
+
+        from hstream_spark.sources import kafka_wire as W
+        from hstream_spark.sources.kafka_stub import KafkaStubBroker
+
+        lane_sizes = []
+        lanes = W._crc32c_lanes
+
+        def spy(data):
+            lane_sizes.append(len(data))
+            return lanes(data)
+
+        monkeypatch.setattr(W, "_crc32c_lanes", spy)
+        with KafkaStubBroker() as broker:
+            broker.create_topic("mixed_t")
+            prod = W.KafkaClient(broker.bootstrap)
+            prod.produce("mixed_t", self._mixed_poll_values())
+            prod.close()
+            eng = HStreamEngine(spark, str(tmp_path / "data"))
+            try:
+                cols = "" if payload else (
+                    "(worker INTEGER, name STRING, clock_in TIME) "
+                )
+                eng.execute(
+                    f"CREATE STREAM mixed {cols}"
+                    "WITH (\"kafka_topic\" = 'mixed_t', "
+                    f"\"kafka_bootstrap_servers\" = '{broker.bootstrap}', "
+                    "\"kafka_poll_interval_ms\" = 0);"
+                )
+                lane_sizes.clear()  # count the tailer's fetch only
+                assert eng.connectors["__kafka_mixed"].handle.poll() == 2000
+                assert lane_sizes and min(lane_sizes) >= W._CRC32C_VECTOR_MIN
+                path = eng.streams["mixed"].path
+                parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
+                assert len(parts) == 1
+                out = eng.execute(
+                    "SELECT worker, name, clock_in, _ts FROM mixed;"
+                ).collect()
+            finally:
+                eng.shutdown()
+
+        def ts(i):
+            return datetime.datetime(1970, 1, 1) + datetime.timedelta(
+                milliseconds=1_000_000 + i
+            )
+
+        if payload:
+            head = [
+                ("0", None, "08:00:00"),
+                ("not-a-number", "x", "08:01:00"),
+                ("2", "y", "25:61:00"),
+                (None, None, None),
+            ]
+            tail = [
+                (str(i), f"w{i:05d}", f"{i % 24:02d}:{i % 60:02d}:00")
+                for i in range(4, 2000)
+            ]
+        else:
+            head = [
+                (0, None, datetime.time(8, 0)),
+                (None, "x", datetime.time(8, 1)),
+                (2, "y", None),
+                (None, None, None),
+            ]
+            tail = [
+                (i, f"w{i:05d}", datetime.time(i % 24, i % 60))
+                for i in range(4, 2000)
+            ]
+        expect = [(*row, ts(i)) for i, row in enumerate(head + tail)]
+        assert sorted((tuple(r) for r in out), key=lambda r: r[3]) == expect
 
     def test_sasl_mechanism_typo_fails_at_create(self, spark, tmp_path):
         import pytest as _pytest

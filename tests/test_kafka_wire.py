@@ -5,11 +5,14 @@ timestamps, offsets rebase correctly, and corruption never decodes."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from hstream_spark.sources.kafka_wire import (
+    _CRC32C_LANES,
+    _CRC32C_VECTOR_MIN,
     KafkaWireError,
+    _crc32c_update,
     crc32c,
     decode_record_batches,
     enc_varint,
@@ -17,11 +20,52 @@ from hstream_spark.sources.kafka_wire import (
 )
 
 
+def _crc32c_bytewise(data: bytes) -> int:
+    """The byte loop alone: the reference the numpy lanes must match."""
+    return _crc32c_update(0xFFFFFFFF, data) ^ 0xFFFFFFFF
+
+
 def test_crc32c_reference_vectors():
     # RFC 3720 §B.4 / common known-answer vectors
     assert crc32c(b"") == 0
     assert crc32c(b"123456789") == 0xE3069283
     assert crc32c(b"a") == 0xC1D04330
+
+
+# lengths around the vector cut-over, with lane remainders 0, 1 and
+# lanes-1 (the bytes the byte loop takes before the lanes start)
+_VECTOR_EDGE_LENGTHS = [
+    _CRC32C_VECTOR_MIN - 1,
+    _CRC32C_VECTOR_MIN,
+    _CRC32C_VECTOR_MIN + 1,
+    _CRC32C_VECTOR_MIN + _CRC32C_LANES - 1,
+    3 * _CRC32C_VECTOR_MIN + 1,
+]
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    length=st.one_of(
+        st.sampled_from(_VECTOR_EDGE_LENGTHS),
+        st.integers(
+            min_value=_CRC32C_VECTOR_MIN - 2 * _CRC32C_LANES,
+            max_value=_CRC32C_VECTOR_MIN + 2 * _CRC32C_LANES,
+        ),
+    ),
+    seed=st.integers(min_value=0, max_value=2**32),
+)
+def test_crc32c_lanes_match_byte_loop(length, seed):
+    import random
+
+    data = random.Random(seed).randbytes(length)
+    assert crc32c(data) == _crc32c_bytewise(data)
+
+
+def _large_records(n: int = 700, size: int = 100) -> list:
+    """Records whose batch is well past the vector cut-over."""
+    return [
+        (None, bytes([i % 251]) * size, 1_000 + i) for i in range(n)
+    ]
 
 
 @given(st.integers(min_value=-(2**63), max_value=2**63 - 1))
@@ -43,6 +87,7 @@ _record = st.tuples(
     records=st.lists(_record, min_size=1, max_size=20),
     base=st.integers(min_value=0, max_value=2**31),
 )
+@example(records=_large_records(), base=7)
 def test_record_batch_round_trip(records, base):
     buf = encode_record_batch(records, base_offset=base)
     out = decode_record_batches(buf)
@@ -73,6 +118,7 @@ def test_concatenated_batches_decode_in_order(batches):
     records=st.lists(_record, min_size=1, max_size=8),
     flip=st.integers(min_value=0, max_value=10**9),
 )
+@example(records=_large_records(), flip=40_000)
 def test_corruption_detected_or_safely_truncated(records, flip):
     """Flipping any payload byte must either raise (CRC/structure), or
     land in one of the two fields the Kafka spec deliberately leaves
@@ -98,6 +144,26 @@ def test_corruption_detected_or_safely_truncated(records, flip):
         raise AssertionError(
             f"flip at {idx} decoded successfully outside the uncovered fields"
         )
+
+
+@pytest.mark.parametrize("where", ["first", "head", "lane", "last"])
+def test_large_batch_single_byte_flip_raises(where):
+    """One flipped byte anywhere in the CRC range of a batch past the
+    cut-over is caught: in the byte-loop head, inside a lane, or at
+    either end."""
+    buf = bytearray(encode_record_batch(_large_records()))
+    start = 8 + 4 + 4 + 1 + 4  # CRC range: attributes to the end
+    assert len(buf) - start >= _CRC32C_VECTOR_MIN
+    head = (len(buf) - start) % _CRC32C_LANES
+    idx = {
+        "first": start,
+        "head": start + max(head - 1, 0),
+        "lane": start + head + (len(buf) - start - head) // 2,
+        "last": len(buf) - 1,
+    }[where]
+    buf[idx] ^= 0x10
+    with pytest.raises(KafkaWireError, match="CRC32C"):
+        decode_record_batches(bytes(buf))
 
 
 def test_empty_batch_rejected():

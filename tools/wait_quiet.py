@@ -21,9 +21,6 @@ STEAL_PCT_MAX = 0.3
 NONSELF_BUSY_PCT_MAX = 15.0
 CONSECUTIVE = 3
 
-_CLK = os.sysconf("SC_CLK_TCK")
-_NCPU = os.cpu_count() or 1
-
 
 def _stat() -> tuple[int, int, int]:
     with open("/proc/stat") as fh:
